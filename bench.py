@@ -5,11 +5,14 @@ Default mode prints ONE JSON line:
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {<name>: sec, ...}, "sf": <sf>, ...extras}
 
+Queries run at local[$SPARK_GRAFT_CPUS], default local[os.cpu_count()].
 --scaling mode runs the flagship extraction pipeline at two parallelism
-levels (local[8] vs local[32]) on identical input and reports throughput at
-both plus scaling efficiency = T8/T32/4 — the sandbox evidence protocol for
-the north rule's "efficiency >= 0.8 from N to 4N executors" (BASELINE.md §
-evidence; a real cluster would use spark-submit at N and 4N executors).
+levels (local[N] vs local[4N]; N = $SPARK_GRAFT_SCALE_N, default a quarter
+of the cpus, so local[1] vs local[4] on a 4-core box) on identical input
+and reports throughput at both plus scaling efficiency = T_N/T_4N/4 — the
+sandbox evidence protocol for the north rule's "efficiency >= 0.8 from N
+to 4N executors" (BASELINE.md § evidence; a real cluster would use
+spark-submit at N and 4N executors).
 
 Every query is forced end-to-end with the noop sink (full column
 materialization — a .count() would let Catalyst prune the UDF columns and
@@ -26,7 +29,7 @@ import time
 from legal_document_ocr_spark.session import build_session
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 
 # headline set: flagship pipeline + one representative per operator family
 HEADLINE = [
@@ -248,7 +251,7 @@ def main_bench() -> None:
 
 
 def main_scaling() -> None:
-    """local[8] vs local[32] on identical input -> scaling efficiency.
+    """local[N] vs local[4N] on identical input -> scaling efficiency.
 
     Uses a replicated corpus (distinct payloads) sized so kernel compute
     dominates fixed costs — a 5k-doc job finishes in ~3 s of scheduling +
@@ -259,7 +262,7 @@ def main_scaling() -> None:
     from legal_document_ocr_spark.stages import run_extraction
 
     replicas = int(os.environ.get("SPARK_GRAFT_SCALE_REPL", "20"))
-    n_small = int(os.environ.get("SPARK_GRAFT_SCALE_N", "8"))
+    n_small = int(os.environ.get("SPARK_GRAFT_SCALE_N", max(1, int(CPUS) // 4)))
     levels = (n_small, n_small * 4)
     results: dict[str, float | int] = {}
     for cores in levels:

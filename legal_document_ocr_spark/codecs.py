@@ -416,13 +416,15 @@ def encode_wav_g711(
 
 def decode_image(payload: bytes) -> dict:
     """Dispatch by magic bytes. PNG/BMP/baseline-JPEG/GIF/TIFF/ICO and
-    BOTH WebP flavors decode for real (jpeg.py: Huffman + IDCT,
+    lossless WebP decode for real (jpeg.py: Huffman + IDCT,
     grayscale/YCbCr, all samplings, restart markers; decode_gif below:
     LZW + interlace + palette; decode_tiff below: none/PackBits/LZW/
     deflate strips, both byte orders; decode_ico below: largest-member
-    election; vp8l.py: lossless WebP; vp8.py round 5: lossy-VP8 intra
-    keyframes incl. all B_PRED submodes and the normal loop filter);
-    video frame essence still needs an external codec."""
+    election; vp8l.py: lossless WebP). Lossy WebP (vp8.py: VP8 intra
+    keyframes incl. all B_PRED submodes and the normal loop filter) uses
+    repo-pinned token-probability and quantizer tables, so it decodes
+    this repo's own encoder output but NOT externally encoded lossy WebP.
+    Video frame essence still needs an external codec."""
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)
     if payload[:2] == b"BM":

@@ -1,7 +1,7 @@
-"""Per-family registry segments (round-4 split of queries.py).
+"""Per-family registry segments.
 
-Each module holds the query callables and DuckDB oracle SQL for one
-slice of the registry, byte-identical to their pre-split bodies; the
-SPARK/ORACLE dicts that __spark_entry__ consumes stay in
-legal_document_ocr_spark.queries (the thin aggregator).
+Each module holds the query callables and DuckDB oracle SQL for one slice
+of the registry and ends with its ``QUERIES`` table. ``order.py`` freezes
+the driver order (generated by ``scripts/registry_rotation.py``);
+``legal_document_ocr_spark.queries`` merges the tables into SPARK/ORACLE.
 """

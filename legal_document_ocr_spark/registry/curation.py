@@ -3,21 +3,11 @@
 from __future__ import annotations
 
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
+from ..operators import dedup, relational, similarity, textops
+from ..operators.textops import STOPWORDS
 
 from .common import (
     _TOKS,
@@ -1647,3 +1637,50 @@ SELECT f.join_key, count(*)::bigint AS n_rows, sum(f.w)::bigint AS sum_w,
 FROM fact f JOIN dim d ON d.join_key = f.join_key
 GROUP BY f.join_key
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "contamination": (q_contamination, _SQL_CONTAMINATION),
+    "quality_classifier": (q_quality_classifier, _SQL_QUALITY_CLF),
+    "bpe_pair_counts": (q_bpe_pair_counts, _SQL_BPE_PAIRS),
+    "holdout_split": (q_holdout_split, _SQL_HOLDOUT_SPLIT),
+    "lm_scores": (q_lm_scores, _SQL_LM_SCORES),
+    "ivf_refined_assign": (q_ivf_refined_assign, _sql_ivf_refined_assign()),
+    "char_entropy": (q_char_entropy, _SQL_CHAR_ENTROPY),
+    "cms_counts": (q_cms_counts, _sql_cms_counts()),
+    "error_pages": (q_error_pages, _sql_error_pages()),
+    "inverted_index": (q_inverted_index, _SQL_INVERTED_INDEX),
+    "bloom_blocklist": (q_bloom_blocklist, _SQL_BLOOM_BLOCKLIST),
+    "embedding_pq_knn": (q_embedding_pq_knn, _sql_embedding_pq_knn()),
+    "curation_funnel_neardup": (q_curation_funnel_neardup, _SQL_CURATION_FUNNEL_NEARDUP),
+    "repetition_stats": (q_repetition_stats, _SQL_REPETITION),
+    "winnow_fingerprints": (q_winnow_fingerprints, _SQL_WINNOW),
+    "embedding_knn": (q_embedding_knn, _sql_embedding_knn()),
+    "embedding_batch_knn": (q_embedding_batch_knn, _sql_embedding_batch_knn()),
+    "embedding_ivf_knn": (q_embedding_ivf_knn, _sql_embedding_ivf_knn()),
+    "embedding_knn_bucketed": (q_embedding_knn_bucketed, _sql_embedding_knn_bucketed()),
+    "embedding_near_dups": (q_embedding_near_dups, _sql_embedding_near_dups()),
+    "cdc_chunks": (q_cdc_chunks, _SQL_CDC_CHUNKS),
+    "semantic_dedup": (q_semantic_dedup, _SQL_SEMANTIC_DEDUP),
+    "heavy_hitters": (q_heavy_hitters, _SQL_HEAVY_HITTERS),
+    "split_leakage": (q_split_leakage, _SQL_SPLIT_LEAKAGE),
+    "global_shuffle": (q_global_shuffle, _SQL_GLOBAL_SHUFFLE),
+    "curriculum_order": (q_curriculum_order, _SQL_CURRICULUM_ORDER),
+    "cluster_sample": (q_cluster_sample, _SQL_CLUSTER_SAMPLE),
+    "multiprobe_knn": (q_multiprobe_knn, _sql_multiprobe_knn()),
+    "ndcg_eval": (q_ndcg_eval, _sql_ndcg_eval()),
+    "fixed_size_sample": (q_fixed_size_sample, _SQL_FIXED_SIZE_SAMPLE),
+    "random_projection": (q_random_projection, _sql_random_projection()),
+    "jl_distortion": (q_jl_distortion, _sql_jl_distortion()),
+    "mmr_select": (q_mmr_select, _SQL_MMR_SELECT),
+    "grid_dbscan": (q_grid_dbscan, _sql_grid_dbscan()),
+    "pps_sample": (q_pps_sample, _SQL_PPS_SAMPLE),
+    "cms_error_audit": (q_cms_error_audit, _sql_cms_error_audit()),
+    "bloom_fpr_audit": (q_bloom_fpr_audit, _SQL_BLOOM_FPR_AUDIT),
+    "salted_group_counts": (q_salted_group_counts, _SQL_SALTED_GROUP_COUNTS),
+    "embedding_sq8": (q_embedding_sq8, _SQL_EMBEDDING_SQ8),
+    "sq8_recall": (q_sq8_recall, _sql_sq8_recall()),
+    "skew_join_salted": (q_skew_join_salted, _SQL_SKEW_JOIN_SALTED),
+}

@@ -3,21 +3,10 @@
 from __future__ import annotations
 
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
+from ..operators import dedup, relational, similarity, textops
 
 from .common import (
     _DOUBLED_SQL,
@@ -31,6 +20,7 @@ from .common import (
     _utc,
 )
 from .relational_web import (
+    _SQL_ROBOTS_PRECEDENCE,
     _host_graph_edges,
     _synth_sitemaps_df,
     q_robots_precedence,
@@ -340,7 +330,11 @@ def q_robots_blockrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     return base.groupBy("host", "verdict").agg(F.count("*").alias("n_urls"))
 
 
-_SQL_ROBOTS_BLOCKRATE: str  # defined after _SQL_ROBOTS_PRECEDENCE below
+_SQL_ROBOTS_BLOCKRATE = (
+    "SELECT host, verdict, count(*)::bigint AS n_urls FROM ("
+    + _SQL_ROBOTS_PRECEDENCE
+    + ") b GROUP BY 1, 2"
+)
 
 
 def q_sitemap_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2107,3 +2101,63 @@ FROM i
 JOIN sz za ON za.source = i.source_a
 JOIN sz zb ON zb.source = i.source_b
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "lang_pivot": (q_lang_pivot, _sql_lang_pivot()),
+    "json_key_census": (q_json_key_census, _SQL_JSON_KEY_CENSUS),
+    "order_date_spine": (q_order_date_spine, _SQL_ORDER_DATE_SPINE),
+    "value_histogram": (q_value_histogram, _SQL_VALUE_HISTOGRAM),
+    "tfidf_pairs": (q_tfidf_pairs, _SQL_TFIDF_PAIRS),
+    "ivf_inertia": (q_ivf_inertia, _SQL_IVF_INERTIA),
+    "stream_quality": (q_stream_quality, _SQL_STREAM_QUALITY),
+    "value_correlation": (q_value_correlation, _SQL_VALUE_CORRELATION),
+    "chi_square": (q_chi_square, _SQL_CHI_SQUARE),
+    "host_degrees": (q_host_degrees, _SQL_HOST_DEGREES),
+    "edit_distances": (q_edit_distances, _SQL_EDIT_DISTANCES),
+    "lang_unpivot": (q_lang_unpivot, _sql_lang_unpivot()),
+    "latest_capture": (q_latest_capture, _SQL_LATEST_CAPTURE),
+    "pricing_charge": (q_pricing_charge, _SQL_PRICING_CHARGE),
+    "param_census": (q_param_census, _SQL_PARAM_CENSUS),
+    "sitemap_coverage": (q_sitemap_coverage, _SQL_SITEMAP_COVERAGE),
+    "robots_blockrate": (q_robots_blockrate, _SQL_ROBOTS_BLOCKRATE),
+    "sized_part_revenue": (q_sized_part_revenue, _SQL_SIZED_PART_REVENUE),
+    "idle_rich_customers": (q_idle_rich_customers, _SQL_IDLE_RICH_CUSTOMERS),
+    "json_array_stats": (q_json_array_stats, _SQL_JSON_ARRAY_STATS),
+    "host_gini": (q_host_gini, _SQL_HOST_GINI),
+    "snapshot_membership": (q_snapshot_membership, _SQL_SNAPSHOT_MEMBERSHIP),
+    "rollup_census": (q_rollup_census, _SQL_ROLLUP_CENSUS),
+    "rolling_values": (q_rolling_values, _SQL_ROLLING_VALUES),
+    "length_ntiles": (q_length_quartiles, _SQL_LENGTH_QUARTILES_NTILE),
+    "cohort_retention": (q_cohort_retention, _SQL_COHORT_RETENTION),
+    "dedup_clusters": (q_dedup_clusters, _SQL_DEDUP_CLUSTERS),
+    "dup_substring_runs": (q_dup_substring_runs, _SQL_DUP_SUBSTRING_RUNS),
+    "dedup_exact": (q_dedup_exact, _SQL_DEDUP_EXACT),
+    "minhash_bands": (q_minhash_bands, _SQL_MINHASH_BANDS),
+    "minhash_pairs": (q_minhash_pairs, _SQL_MINHASH_PAIRS),
+    "simhash": (q_simhash, _SQL_SIMHASH),
+    "simhash_pairs": (q_simhash_pairs, _SQL_SIMHASH_PAIRS),
+    "ngram_jaccard": (q_ngram_jaccard, _SQL_NGRAM_JACCARD),
+    "neardup_verified": (q_neardup_verified, _SQL_NEARDUP_VERIFIED),
+    "record_linkage": (q_record_linkage, _SQL_RECORD_LINKAGE),
+    "containment_pairs": (q_containment_pairs, _SQL_CONTAINMENT_PAIRS),
+    "cube_census": (q_cube_census, _SQL_CUBE_CENSUS),
+    "column_profile": (q_column_profile, _sql_column_profile()),
+    "prefix_jaccard": (q_prefix_jaccard, _SQL_PREFIX_JACCARD),
+    "stream_enrich": (q_stream_enrich, _SQL_STREAM_ENRICH),
+    "contrastive_triplets": (q_contrastive_triplets, _SQL_CONTRASTIVE_TRIPLETS),
+    "dedup_bcubed": (q_dedup_bcubed, _SQL_DEDUP_BCUBED),
+    "stream_attribution": (q_stream_attribution, _SQL_STREAM_ATTRIBUTION),
+    "minhash_merge": (q_minhash_merge, _sql_minhash_merge()),
+    "stream_minhash": (q_stream_minhash, _sql_minhash_merge()),
+    "soft_dedup_weights": (q_soft_dedup_weights, _SQL_SOFT_DEDUP_WEIGHTS),
+    "dedup_ari": (q_dedup_ari, _SQL_DEDUP_ARI),
+    "dedup_purity": (q_dedup_purity, _SQL_DEDUP_PURITY),
+    "theil_index": (q_theil_index, _SQL_THEIL_INDEX),
+    "pair_threshold_curve": (q_pair_threshold_curve, _SQL_PAIR_THRESHOLD_CURVE),
+    "prefix_filter_pairs": (q_prefix_filter_pairs, _SQL_PREFIX_FILTER_PAIRS),
+    "dedup_key_agreement": (q_dedup_key_agreement, _sql_dedup_key_agreement()),
+    "source_similarity": (q_source_similarity, _SQL_SOURCE_SIMILARITY),
+}

@@ -3,14 +3,11 @@
 from __future__ import annotations
 
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
+from ..operators import textops
 from ..sources.pages import (
     synthesize_pages_df,
     synthesize_table_pages_df,
@@ -578,3 +575,25 @@ SELECT doc_id,
        ELSE NULL END AS safe_elem
 FROM documents
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "extract_main_text": (q_extract_main_text, _SQL_EXTRACT_MAIN),
+    "extract_sql_surface": (q_extract_sql_surface, _SQL_EXTRACT_MAIN),
+    "extract_stats": (q_extract_stats, _SQL_EXTRACT_STATS),
+    "extract_fields_vn": (q_extract_fields_vn, _SQL_EXTRACT_FIELDS_VN),
+    "extract_tables": (q_extract_tables, _SQL_EXTRACT_TABLES),
+    "explode_spans": (q_explode_spans, _SQL_EXPLODE_SPANS),
+    "merge_documents_vn": (q_merge_documents_vn, _SQL_MERGE_VN),
+    "merge_split_vn": (q_merge_split_vn, _SQL_MERGE_SPLIT_VN),
+    "span_scores": (q_span_scores, _SQL_SPAN_SCORES),
+    "partitioned_sink_readback": (q_partitioned_sink_readback, _SQL_PARTITIONED_SINK),
+    "dedup_stats": (q_dedup_stats, _SQL_DEDUP_STATS),
+    "events_json": (q_events_json, _SQL_EVENTS_JSON),
+    "legal_citations": (q_legal_citations, _SQL_LEGAL_CITATIONS),
+    "compaction_readback": (q_compaction_readback, _SQL_COMPACTION_READBACK),
+    "observed_metrics": (q_observed_metrics, _SQL_OBSERVED_METRICS),
+    "ansi_safety": (q_ansi_safety, _SQL_ANSI_SAFETY),
+}

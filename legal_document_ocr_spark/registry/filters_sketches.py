@@ -3,20 +3,11 @@
 from __future__ import annotations
 
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
+from ..operators import dedup, relational, textops
+from ..sources.pages import synthesize_pages_df
 from ..stages import run_extraction
 
 from .common import (
@@ -27,7 +18,6 @@ from .common import (
     _utc,
 )
 from .relational_web import (
-    _SQL_ROBOTS_PRECEDENCE,
     _host_graph_edges,
     _synth_robots_df,
 )
@@ -1616,15 +1606,6 @@ FROM documents d LEFT JOIN s USING (doc_id)
 """
 
 
-_SQL_ROBOTS_BLOCKRATE = (
-    "SELECT host, verdict, count(*)::bigint AS n_urls FROM ("
-    + _SQL_ROBOTS_PRECEDENCE
-    + ") b GROUP BY 1, 2"
-)
-
-
-
-
 _MONTHS3 = (
     "Jan", "Feb", "Mar", "Apr", "May", "Jun",
     "Jul", "Aug", "Sep", "Oct", "Nov", "Dec",
@@ -2416,3 +2397,55 @@ SELECT lang, count(DISTINCT doc_id)::bigint AS n_exact,
   true AS within_3pct
 FROM documents GROUP BY lang
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "dsir_weights": (q_dsir_weights, _SQL_DSIR_WEIGHTS),
+    "redirect_chains": (q_redirect_chains, _SQL_REDIRECT_CHAINS),
+    "incremental_neardup": (q_incremental_neardup, _sql_incremental_neardup()),
+    "bpe_train": (q_bpe_train, _sql_bpe_train()),
+    "bpe_fertility": (q_bpe_fertility, _sql_bpe_fertility()),
+    "perplexity_filter": (q_perplexity_filter, _SQL_PERPLEXITY_FILTER),
+    "wet_records": (q_wet_records, _SQL_WET_RECORDS),
+    "source_divergence": (q_source_divergence, _SQL_SOURCE_DIVERGENCE),
+    "link_farms": (q_link_farms, _SQL_LINK_FARMS),
+    "warc_http_parse": (q_warc_http_parse, _SQL_WARC_HTTP_PARSE),
+    "host_mirrors": (q_host_mirrors, _sql_host_mirrors()),
+    "robots_sitemaps": (q_robots_sitemaps, _SQL_ROBOTS_SITEMAPS),
+    "html_entities": (q_html_entities, _sql_html_entities()),
+    "oov_rate": (q_oov_rate, _SQL_OOV_RATE),
+    "collapse_lines": (q_collapse_lines, _SQL_COLLAPSE_LINES),
+    "zipf_fit": (q_zipf_fit, _SQL_ZIPF_FIT),
+    "lang_consistency": (q_lang_consistency, _SQL_LANG_CONSISTENCY),
+    "script_mix": (q_script_mix, _sql_script_mix()),
+    "text_density_blocks": (q_text_density_blocks, _SQL_TEXT_DENSITY_BLOCKS),
+    "host_length_outliers": (q_host_length_outliers, _SQL_HOST_LENGTH_OUTLIERS),
+    "bm25_scores": (q_bm25_scores, _SQL_BM25),
+    "pmi_collocations": (q_pmi_collocations, _SQL_PMI),
+    "c4_filters": (q_c4_filters, _SQL_C4),
+    "gopher_rules": (q_gopher_rules, _SQL_GOPHER_RULES),
+    "gopher_repetition": (q_gopher_repetition, _SQL_GOPHER_REPETITION),
+    "mojibake_stats": (q_mojibake_stats, _SQL_MOJIBAKE),
+    "shard_assign": (q_shard_assign, _SQL_SHARD_ASSIGN),
+    "hll_distinct": (q_hll_distinct, _SQL_HLL_DISTINCT),
+    "hll_by_source": (q_hll_by_source, _SQL_HLL_BY_SOURCE),
+    "curation_pipeline": (q_curation_pipeline, _SQL_CURATION_PIPELINE),
+    "host_hits": (q_host_hits, _sql_host_hits()),
+    "x_robots_headers": (q_x_robots_headers, _SQL_X_ROBOTS_HEADERS),
+    "cache_policy": (q_cache_policy, _SQL_CACHE_POLICY),
+    "truncated_captures": (q_truncated_captures, _SQL_TRUNCATED_CAPTURES),
+    "soft404": (q_soft404, _SQL_SOFT404),
+    "paywall_detect": (q_paywall_detect, _SQL_PAYWALL_DETECT),
+    "html_markdown": (q_html_markdown, _sql_html_markdown()),
+    "weighted_sample": (q_weighted_sample, _SQL_WEIGHTED_SAMPLE),
+    "domain_quality_ci": (q_domain_quality_ci, _SQL_DOMAIN_QUALITY_CI),
+    "budget_select": (q_budget_select, _SQL_BUDGET_SELECT),
+    "query_likelihood": (q_query_likelihood, _SQL_QUERY_LIKELIHOOD),
+    "hll_rolling_distinct": (q_hll_rolling_distinct, _SQL_HLL_ROLLING_DISTINCT),
+    "consistent_hash_moves": (q_consistent_hash_moves, _SQL_CONSISTENT_HASH_MOVES),
+    "bitmap_distinct": (q_bitmap_distinct, _SQL_BITMAP_DISTINCT),
+    "listagg_sources": (q_listagg_sources, _SQL_LISTAGG_SOURCES),
+    "hll_native_distinct": (q_hll_native_distinct, _SQL_HLL_NATIVE_DISTINCT),
+}

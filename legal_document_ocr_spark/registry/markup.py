@@ -973,3 +973,27 @@ SELECT host, count(*)::bigint AS n_pages,
   sum(c)::bigint AS conflicts
 FROM e GROUP BY host
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "idn_hosts": (q_idn_hosts, _sql_idn_hosts()),
+    "srcset_candidates": (q_srcset_candidates, _sql_srcset_candidates()),
+    "opengraph_meta": (q_opengraph_meta, _sql_opengraph_meta()),
+    "charset_sniff": (q_charset_sniff, _sql_charset_sniff()),
+    "cookie_census": (q_cookie_census, _sql_cookie_census()),
+    "security_headers": (q_security_headers, _sql_security_headers()),
+    "amp_pairs": (q_amp_pairs, _sql_amp_pairs()),
+    "license_detect": (q_license_detect, _sql_license_detect()),
+    "faq_pairs": (q_faq_pairs, _sql_faq_pairs()),
+    "form_census": (q_form_census, _sql_form_census()),
+    "code_blocks": (q_code_blocks, _sql_code_blocks()),
+    "math_blocks": (q_math_blocks, _sql_math_blocks()),
+    "image_harvest": (q_image_harvest, _sql_image_harvest()),
+    "page_assets": (q_page_assets, _sql_page_assets()),
+    "url_safety": (q_url_safety, _sql_url_safety()),
+    "homoglyph_domains": (q_homoglyph_domains, _sql_homoglyph_domains()),
+    "toc_extract": (q_toc_extract, _SQL_TOC_EXTRACT),
+    "robots_directive_merge": (q_robots_directive_merge, _SQL_ROBOTS_DIRECTIVE_MERGE),
+}

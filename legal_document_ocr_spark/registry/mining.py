@@ -2218,3 +2218,56 @@ FROM (
 )
 """
     )
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "triangle_count": (q_triangle_count, _SQL_TRIANGLE_COUNT),
+    "cocitation_pairs": (q_cocitation_pairs, _SQL_COCITATION_PAIRS),
+    "pareto_frontier": (q_pareto_frontier, _SQL_PARETO_FRONTIER),
+    "kmv_overlap": (q_kmv_overlap, _SQL_KMV_OVERLAP),
+    "event_transitions": (q_event_transitions, _SQL_EVENT_TRANSITIONS),
+    "session_paths": (q_session_paths, _SQL_SESSION_PATHS),
+    "event_bursts": (q_event_bursts, _SQL_EVENT_BURSTS),
+    "ngram_novelty": (q_ngram_novelty, _SQL_NGRAM_NOVELTY),
+    "exif_extract": (q_exif_extract, _SQL_EXIF_EXTRACT),
+    "source_dup_matrix": (q_source_dup_matrix, _SQL_SOURCE_DUP_MATRIX),
+    "score_calibration": (q_score_calibration, _SQL_SCORE_CALIBRATION),
+    # zlib ratio: not SQL-expressible, so no oracle (rows-only check)
+    "compression_ratio": (q_compression_ratio, None),
+    "microdata_extract": (q_microdata_extract, _SQL_MICRODATA_EXTRACT),
+    "wat_records": (q_wat_records, _sql_wat_records()),
+    "orc_sink_readback": (q_orc_sink_readback, _SQL_ORC_SINK_READBACK),
+    "jsonl_sink_readback": (q_jsonl_sink_readback, _SQL_JSONL_SINK_READBACK),
+    "csv_sink_readback": (q_csv_sink_readback, _SQL_CSV_SINK_READBACK),
+    "csv_parse_isolation": (q_csv_parse_isolation, _SQL_CSV_PARSE_ISOLATION),
+    "neardup_eval": (q_neardup_eval, _sql_neardup_eval()),
+    "shard_manifest": (q_shard_manifest, _sql_shard_manifest()),
+    "seed_reachability": (q_seed_reachability, _sql_seed_reachability()),
+    "dup_family_histogram": (q_dup_family_histogram, _SQL_DUP_FAMILY_HISTOGRAM),
+    "quantile_drift": (q_quantile_drift, _sql_quantile_drift()),
+    "hyperball": (q_hyperball, _sql_hyperball()),
+    "bloom_dedup": (q_bloom_dedup, _sql_bloom_dedup()),
+    "warc_segments": (q_warc_segments, _SQL_WARC_SEGMENTS),
+    "schema_evolution": (q_schema_evolution, _SQL_SCHEMA_EVOLUTION),
+    "neighborhood_function": (q_neighborhood_function, _sql_neighborhood_function()),
+    "bucketed_join_readback": (q_bucketed_join_readback, _SQL_BUCKETED_JOIN_READBACK),
+    "event_acf": (q_event_acf, _SQL_EVENT_ACF),
+    "cusum_changepoint": (q_cusum_changepoint, _SQL_CUSUM_CHANGEPOINT),
+    "markov_stationary": (q_markov_stationary, _SQL_MARKOV_STATIONARY),
+    "interarrival_stats": (q_interarrival_stats, _SQL_INTERARRIVAL_STATS),
+    "random_walks": (q_random_walks, _SQL_RANDOM_WALKS),
+    "xml_sink_readback": (q_xml_sink_readback, _SQL_XML_SINK_READBACK),
+    "xml_field_extract": (q_xml_field_extract, _SQL_XML_FIELD_EXTRACT),
+    "variant_shred": (q_variant_shred, _SQL_VARIANT_SHRED),
+    "variant_explode_tags": (q_variant_explode_tags, _SQL_VARIANT_EXPLODE_TAGS),
+    "session_window_agg": (q_session_window_agg, _SQL_SESSION_WINDOW_AGG),
+    "udtf_shingles": (q_udtf_shingles, _SQL_UDTF_SHINGLES),
+    "bloom_sink_readback": (q_bloom_sink_readback, _SQL_BLOOM_SINK_READBACK),
+    "measurements_extract": (q_measurements_extract, _SQL_MEASUREMENTS_EXTRACT),
+    "quote_mining": (q_quote_mining, _SQL_QUOTE_MINING),
+    "harmonic_centrality": (q_harmonic_centrality, _sql_harmonic_centrality()),
+    "bowtie_membership": (q_bowtie_membership, _sql_bowtie_membership()),
+    "markov_entropy_rate": (q_markov_entropy_rate, _sql_markov_entropy_rate()),
+}

@@ -3,27 +3,18 @@
 from __future__ import annotations
 
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
+from ..operators import multimodal, relational, textops
 
 from .common import (
     _TOKS,
     _docs,
     _utc,
 )
+from .mining import _SQL_SESSION_WINDOW_AGG
+from .relational_web import _SQL_SESSIONIZE, _SQL_WINDOWED_COUNTS
 
 # ---------------------------------------------------------------------------
 # multimodal + streaming
@@ -809,3 +800,30 @@ SELECT grp AS source, max(n_rows)::bigint AS n_rows,
         THEN val END)::bigint AS q_990000
 FROM cum GROUP BY grp
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "stream_dedup": (q_stream_dedup, _SQL_STREAM_DEDUP),
+    "stream_incremental_dedup": (q_stream_incremental_dedup, _SQL_STREAM_INCR_DEDUP),
+    "url_spam": (q_url_spam, _sql_url_spam()),
+    "host_template_lines": (q_host_template_lines, _SQL_HOST_TEMPLATE_LINES),
+    "recrawl_priority": (q_recrawl_priority, _SQL_RECRAWL_PRIORITY),
+    "registrable_domains": (q_registrable_domains, _sql_registrable_domains()),
+    "domain_rollup": (q_domain_rollup, _sql_domain_rollup()),
+    "host_page_cap": (q_host_page_cap, _SQL_HOST_PAGE_CAP),
+    "length_quantiles": (q_length_quantiles, _SQL_LENGTH_QUANTILES),
+    "multimodal_features": (q_multimodal_features, _SQL_MULTIMODAL),
+    "multimodal_frames": (q_multimodal_frames, _SQL_MULTIMODAL_FRAMES),
+    "stream_windowed_counts": (q_stream_windowed_counts, _SQL_WINDOWED_COUNTS),
+    "stream_sessionize": (q_stream_sessionize, _SQL_SESSIONIZE),
+    "stream_dedup_wm": (q_stream_dedup_wm, _SQL_STREAM_DEDUP_WM),
+    "content_type_mismatch": (q_content_type_mismatch, _SQL_CONTENT_TYPE_MISMATCH),
+    "stream_sniff_census": (q_stream_sniff_census, _SQL_STREAM_SNIFF_CENSUS),
+    "stream_hll_registers": (q_stream_hll_registers, _SQL_STREAM_HLL_REGISTERS),
+    "stream_cms_registers": (q_stream_cms_registers, _SQL_STREAM_CMS_REGISTERS),
+    "stream_media_decode": (q_stream_media_decode, _SQL_STREAM_MEDIA_DECODE),
+    "stream_session_window": (q_stream_session_window, _SQL_SESSION_WINDOW_AGG),
+    "stream_quantile_sketch": (q_stream_quantile_sketch, _SQL_STREAM_QUANTILE_SKETCH),
+}

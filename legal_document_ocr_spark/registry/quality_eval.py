@@ -2649,3 +2649,64 @@ SELECT (CASE WHEN d.n_chars < t25 THEN 0
   max(d.n_chars)::bigint AS max_v
 FROM documents d, th GROUP BY 1
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "k_anonymity": (q_k_anonymity, _SQL_K_ANONYMITY),
+    "functional_dependencies": (q_functional_dependencies, _sql_functional_dependencies()),
+    "winsorized_stats": (q_winsorized_stats, _SQL_WINSORIZED_STATS),
+    "url_templates": (q_url_templates, _SQL_URL_TEMPLATES),
+    "degree_assortativity": (q_degree_assortativity, _SQL_DEGREE_ASSORTATIVITY),
+    "ann_recall_eval": (q_ann_recall_eval, _sql_ann_recall_eval()),
+    "rank_fusion": (q_rank_fusion, _sql_rank_fusion()),
+    "temperature_mixture": (q_temperature_mixture, _SQL_TEMPERATURE_MIXTURE),
+    "robots_drift": (q_robots_drift, _SQL_ROBOTS_DRIFT),
+    "ivf_admission": (q_ivf_admission, _SQL_IVF_ADMISSION),
+    "centroid_drift": (q_centroid_drift, _SQL_CENTROID_DRIFT),
+    "filter_agreement": (q_filter_agreement, _SQL_FILTER_AGREEMENT),
+    "epoch_plan": (q_epoch_plan, _SQL_EPOCH_PLAN),
+    "rollup_merge": (q_rollup_merge, _SQL_ROLLUP_MERGE),
+    "robots_wildcards": (q_robots_wildcards, _SQL_ROBOTS_WILDCARDS),
+    "bootstrap_ci": (q_bootstrap_ci, _sql_bootstrap_ci()),
+    "linreg_train": (q_linreg_train, _SQL_LINREG_TRAIN),
+    "logreg_train_gd": (q_logreg_train_gd, _SQL_LOGREG_TRAIN_GD),
+    "byte_fertility": (q_byte_fertility, _SQL_BYTE_FERTILITY),
+    "filter_ensemble": (q_filter_ensemble, _sql_filter_ensemble()),
+    "percentile_normalize": (q_percentile_normalize, _SQL_PERCENTILE_NORMALIZE),
+    "neyman_allocation": (q_neyman_allocation, _SQL_NEYMAN_ALLOCATION),
+    "crossval_ols": (q_crossval_ols, _SQL_CROSSVAL_OLS),
+    "threshold_select": (q_threshold_select, _SQL_THRESHOLD_SELECT),
+    "ks_statistic": (q_ks_statistic, _SQL_KS_STATISTIC),
+    "auc_exact": (q_auc_exact, _SQL_AUC_EXACT),
+    "quality_residuals": (q_quality_residuals, _SQL_QUALITY_RESIDUALS),
+    "log2_histogram": (q_log2_histogram, _SQL_LOG2_HISTOGRAM),
+    "kendall_tau": (q_kendall_tau, _SQL_KENDALL_TAU),
+    "spearman_rho": (q_spearman_rho, _SQL_SPEARMAN_RHO),
+    "mrr_eval": (q_mrr_eval, _sql_mrr_eval()),
+    "avg_precision": (q_avg_precision, _SQL_AVG_PRECISION),
+    "rbo_overlap": (q_rbo_overlap, _sql_rbo_overlap()),
+    "hill_tail_index": (q_hill_tail_index, _SQL_HILL_TAIL_INDEX),
+    "simpson_diversity": (q_simpson_diversity, _SQL_SIMPSON_DIVERSITY),
+    "welch_ttest": (q_welch_ttest, _SQL_WELCH_TTEST),
+    "cvm_statistic": (q_cvm_statistic, _SQL_CVM_STATISTIC),
+    "reliability_bins": (q_reliability_bins, _SQL_RELIABILITY_BINS),
+    "waterfill_allocation": (q_waterfill_allocation, _SQL_WATERFILL_ALLOCATION),
+    "otsu_threshold": (q_otsu_threshold, _SQL_OTSU_THRESHOLD),
+    "benford_deviation": (q_benford_deviation, _sql_benford_deviation()),
+    "runs_test": (q_runs_test, _SQL_RUNS_TEST),
+    "mcnemar_filters": (q_mcnemar_filters, _SQL_MCNEMAR_FILTERS),
+    "emd_drift": (q_emd_drift, _SQL_EMD_DRIFT),
+    "l_diversity": (q_l_diversity, _SQL_L_DIVERSITY),
+    "t_closeness": (q_t_closeness, _SQL_T_CLOSENESS),
+    "mann_whitney": (q_mann_whitney, _SQL_MANN_WHITNEY),
+    "fleiss_kappa": (q_fleiss_kappa, _SQL_FLEISS_KAPPA),
+    "shannon_diversity": (q_shannon_diversity, _SQL_SHANNON_DIVERSITY),
+    "peak_concurrency": (q_peak_concurrency, _SQL_PEAK_CONCURRENCY),
+    "quantile_sketch_merge": (q_quantile_sketch_merge, _SQL_QUANTILE_SKETCH_MERGE),
+    "concentration_indices": (q_concentration_indices, _SQL_CONCENTRATION_INDICES),
+    "psi_drift": (q_psi_drift, _SQL_PSI_DRIFT),
+    "brier_score": (q_brier_score, _SQL_BRIER_SCORE),
+    "range_partition_audit": (q_range_partition_audit, _SQL_RANGE_PARTITION_AUDIT),
+}

@@ -3,21 +3,11 @@
 from __future__ import annotations
 
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
+from ..operators import dedup, multimodal, relational, textops
+from ..sources.pages import synthesize_pages_df
 
 from ..scale.salt import ensure_parallelism as _spread
 from .common import (
@@ -3151,3 +3141,74 @@ SELECT ws::bigint AS window_start, event_type,
   count(*)::bigint AS n_events
 FROM ex GROUP BY ws, event_type ORDER BY window_start, event_type
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "crawl_schedule": (q_crawl_schedule, _SQL_CRAWL_SCHEDULE),
+    "dom_stats": (q_dom_stats, _SQL_DOM_STATS),
+    "cdx_revisits": (q_cdx_revisits, _sql_cdx_revisits()),
+    "robots_precedence": (q_robots_precedence, _SQL_ROBOTS_PRECEDENCE),
+    "warc_binary_parse": (q_warc_binary_parse, _sql_warc_binary_parse()),
+    "robots_rules": (q_robots_rules, _SQL_ROBOTS_RULES),
+    "sitemap_urls": (q_sitemap_urls, _SQL_SITEMAP_URLS),
+    "frontier_polite": (q_frontier_polite, _SQL_FRONTIER_POLITE),
+    "anchor_texts": (q_anchor_texts, _sql_anchor_texts()),
+    "anchor_index": (q_anchor_index, _sql_anchor_index()),
+    "html_metadata": (q_html_metadata, _SQL_HTML_METADATA),
+    "cdx_index": (q_cdx_index, _sql_cdx_index()),
+    "pdf_extract": (q_pdf_extract, _SQL_PDF_EXTRACT),
+    "image_ahash": (q_image_ahash, _SQL_IMAGE_AHASH),
+    "image_near_pairs": (q_image_near_pairs, _SQL_IMAGE_NEAR_PAIRS),
+    "extraction_eval": (q_extraction_eval, _SQL_EXTRACTION_EVAL),
+    "pricing_summary": (q_pricing_summary, _SQL_PRICING),
+    "revenue_by_nation": (q_revenue_by_nation, _SQL_REVENUE_NATION),
+    "top_brands": (q_top_brands, _SQL_TOP_BRANDS),
+    "order_ranks": (q_order_ranks, _SQL_ORDER_RANKS),
+    "sessionize_events": (q_sessionize_events, _SQL_SESSIONIZE),
+    "windowed_event_counts": (q_windowed_event_counts, _SQL_WINDOWED_COUNTS),
+    "list_documents_page": (q_list_documents_page, _SQL_LIST_DOCS),
+    "point_lookup": (q_point_lookup, _SQL_POINT_LOOKUP),
+    "delete_documents": (q_delete_documents, _SQL_DELETE_DOCS),
+    "update_documents": (q_update_documents, _SQL_UPDATE_DOCS),
+    "adjacent_word_overlap": (q_adjacent_word_overlap, _SQL_WORD_OVERLAP),
+    "asof_events": (q_asof_events, _SQL_ASOF_EVENTS),
+    "corpus_rollup": (q_corpus_rollup, _SQL_CORPUS_ROLLUP),
+    "stratified_sample": (q_stratified_sample, _SQL_STRATIFIED_SAMPLE),
+    "domain_profile": (q_domain_profile, _sql_domain_profile()),
+    "extract_links": (q_extract_links, _sql_extract_links()),
+    "host_pagerank": (q_host_pagerank, _sql_host_pagerank()),
+    "crawl_frontier": (q_crawl_frontier, _sql_crawl_frontier()),
+    "warc_parse": (q_warc_parse, _sql_warc_parse()),
+    "crawl_diff": (q_crawl_diff, _SQL_CRAWL_DIFF),
+    "kmv_distinct": (q_kmv_distinct, _SQL_KMV_DISTINCT),
+    "jsonld_extract": (q_jsonld_extract, _SQL_JSONLD_EXTRACT),
+    "hreflang_reciprocity": (q_hreflang_reciprocity, _SQL_HREFLANG_RECIPROCITY),
+    "feed_entries": (q_feed_entries, _SQL_FEED_ENTRIES),
+    "trust_rank": (q_trust_rank, _sql_trust_rank()),
+    "ip_ranges": (q_ip_ranges, _SQL_IP_RANGES),
+    "zorder_docs": (q_zorder_docs, _sql_zorder_docs()),
+    "publish_dates": (q_publish_dates, _SQL_PUBLISH_DATES),
+    "outline_numbering": (q_outline_numbering, _SQL_OUTLINE_NUMBERING),
+    "capture_intervals": (q_capture_intervals, _SQL_CAPTURE_INTERVALS),
+    "host_communities": (q_host_communities, _sql_host_communities()),
+    "k_core": (q_k_core, _SQL_K_CORE),
+    "url_survival": (q_url_survival, _SQL_URL_SURVIVAL),
+    "image_alt_pairs": (q_image_alt_pairs, _SQL_IMAGE_ALT_PAIRS),
+    "cdc_apply": (q_cdc_apply, _SQL_CDC_APPLY),
+    "image_dup_clusters": (q_image_dup_clusters, _SQL_IMAGE_DUP_CLUSTERS),
+    "link_locality": (q_link_locality, _sql_link_locality()),
+    "title_dup_census": (q_title_dup_census, _SQL_TITLE_DUP_CENSUS),
+    "http_cache_plan": (q_http_cache_plan, _SQL_HTTP_CACHE_PLAN),
+    "dow_seasonality": (q_dow_seasonality, _SQL_DOW_SEASONALITY),
+    "pagerank_convergence": (q_pagerank_convergence, _sql_pagerank_convergence()),
+    "pagination_extract": (q_pagination_extract, _SQL_PAGINATION_EXTRACT),
+    "breadcrumb_census": (q_breadcrumb_census, _SQL_BREADCRUMB_CENSUS),
+    "page_series_gaps": (q_page_series_gaps, _SQL_PAGE_SERIES_GAPS),
+    "canonical_pick": (q_canonical_pick, _SQL_CANONICAL_PICK),
+    "stitch_series": (q_stitch_series, _SQL_STITCH_SERIES),
+    "cdx_zipnum": (q_cdx_zipnum, _sql_cdx_zipnum()),
+    "seasonal_anomaly": (q_seasonal_anomaly, _SQL_SEASONAL_ANOMALY),
+    "sliding_event_counts": (q_sliding_event_counts, _SQL_SLIDING_EVENT_COUNTS),
+}

@@ -3,21 +3,11 @@
 from __future__ import annotations
 
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
+from ..operators import dedup, textops
 from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
 
 from .common import (
     _DOUBLED_SQL,
@@ -2675,3 +2665,65 @@ JOIN (SELECT DISTINCT doc_id, source FROM documents) d
   ON d.doc_id = a.doc_id
 GROUP BY d.source
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "token_counts": (q_token_counts, _SQL_TOKEN_COUNTS),
+    "lang_id": (q_lang_id, _sql_lang_id()),
+    "quality_scores": (q_quality_scores, _SQL_QUALITY),
+    "corpus_length_stats": (q_corpus_length_stats, _SQL_CORPUS_STATS),
+    "fingerprints": (q_fingerprints, _SQL_FINGERPRINTS),
+    "nfc_fingerprints": (q_nfc_fingerprints, _SQL_NFC_FP),
+    "redact_pii": (q_redact_pii, _SQL_REDACT_PII),
+    "top_terms": (q_top_terms, _SQL_TOP_TERMS),
+    "tfidf_terms": (q_tfidf_terms, _SQL_TFIDF_TERMS),
+    "curation_funnel": (q_curation_funnel, _SQL_CURATION_FUNNEL),
+    "mixture_weights": (q_mixture_weights, _SQL_MIXTURE_WEIGHTS),
+    "canonical_urls": (q_canonical_urls, _SQL_CANONICAL_URLS),
+    "pii_luhn": (q_pii_luhn, _SQL_PII_LUHN),
+    "readability": (q_readability, _SQL_READABILITY),
+    "bitext_candidates": (q_bitext_candidates, _SQL_BITEXT_CANDIDATES),
+    "langid_confusion": (q_langid_confusion, _sql_langid_confusion()),
+    "negative_sampling_table": (q_negative_sampling_table, _SQL_NEGATIVE_SAMPLING_TABLE),
+    "feature_hashing": (q_feature_hashing, _sql_feature_hashing()),
+    "kneser_ney_bigrams": (q_kneser_ney_bigrams, _SQL_KNESER_NEY_BIGRAMS),
+    "langid_spans": (q_langid_spans, _sql_langid_spans()),
+    "word_dropout": (q_word_dropout, _SQL_WORD_DROPOUT),
+    "conditional_entropy": (q_conditional_entropy, _SQL_CONDITIONAL_ENTROPY),
+    "vocab_coverage": (q_vocab_coverage, _SQL_VOCAB_COVERAGE),
+    "code_detect": (q_code_detect, _SQL_CODE_DETECT),
+    "deleted_interpolation": (q_deleted_interpolation, _SQL_DELETED_INTERPOLATION),
+    "span_corruption": (q_span_corruption, _SQL_SPAN_CORRUPTION),
+    "dedup_diversity": (q_dedup_diversity, _sql_dedup_diversity()),
+    "heldout_perplexity": (q_heldout_perplexity, _SQL_HELDOUT_PERPLEXITY),
+    "best_snippet": (q_best_snippet, _SQL_BEST_SNIPPET),
+    "shared_prefixes": (q_shared_prefixes, _SQL_SHARED_PREFIXES),
+    "term_burstiness": (q_term_burstiness, _sql_term_burstiness()),
+    "keyness_terms": (q_keyness_terms, _SQL_KEYNESS_TERMS),
+    "vocab_churn": (q_vocab_churn, _SQL_VOCAB_CHURN),
+    "lm_greedy_decode": (q_lm_greedy_decode, _sql_lm_greedy_decode()),
+    "novelty_curve": (q_novelty_curve, _sql_novelty_curve()),
+    "heaps_law": (q_heaps_law, _sql_heaps_law()),
+    "good_turing": (q_good_turing, _SQL_GOOD_TURING),
+    "mlm_mask_plan": (q_mlm_mask_plan, _SQL_MLM_MASK_PLAN),
+    "symspell_variants": (q_symspell_variants, _SQL_SYMSPELL_VARIANTS),
+    "hapax_share": (q_hapax_share, _SQL_HAPAX_SHARE),
+    "burrows_delta": (q_burrows_delta, _SQL_BURROWS_DELTA),
+    "chao1_richness": (q_chao1_richness, _SQL_CHAO1_RICHNESS),
+    "rocchio_expansion": (q_rocchio_expansion, _SQL_ROCCHIO_EXPANSION),
+    "coverage_curve": (q_coverage_curve, _SQL_COVERAGE_CURVE),
+    "index_pruning": (q_index_pruning, _SQL_INDEX_PRUNING),
+    "greedy_cover": (q_greedy_cover, _sql_greedy_cover()),
+    "dehyphenate": (q_dehyphenate, _SQL_DEHYPHENATE),
+    "split_sentences": (q_split_sentences, _SQL_SPLIT_SENTENCES),
+    "wordpiece_segments": (q_wordpiece_segments, _sql_wordpiece_segments()),
+    "wordpiece_usage": (q_wordpiece_usage, _sql_wordpiece_usage()),
+    "wordpiece_fertility": (q_wordpiece_fertility, _sql_wordpiece_fertility()),
+    "unigram_segments": (q_unigram_segments, _sql_unigram_segments()),
+    "unigram_fertility": (q_unigram_fertility, _sql_unigram_fertility()),
+    "sentence_dedup": (q_sentence_dedup, _SQL_SENTENCE_DEDUP),
+    "sentence_chunks": (q_sentence_chunks, _SQL_SENTENCE_CHUNKS),
+    "rag_corpus_pipeline": (q_rag_corpus_pipeline, _SQL_RAG_CORPUS_PIPELINE),
+}

@@ -3,21 +3,10 @@
 from __future__ import annotations
 
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..merge import merge_documents
-from ..operators import dedup, multimodal, relational, similarity, textops
-from ..operators.textops import LANG_MARKERS, STOPWORDS, WORD_PATTERN
-from ..sources.pages import (
-    synthesize_pages_df,
-    synthesize_table_pages_df,
-    synthesize_vn_pages_df,
-    synthesize_vn_split_pages_df,
-)
-from ..stages import run_extraction
+from ..operators import dedup, multimodal, relational, textops
 
 from ..scale.salt import ensure_parallelism as _spread
 from .common import (
@@ -2527,3 +2516,63 @@ SELECT doc_id, (lum * 16 // 256)::bigint AS bin,
   count(*)::bigint AS n_px_bin, NULL::varchar AS error
 FROM flat GROUP BY doc_id, bin
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "cluster_reps": (q_cluster_reps, _SQL_CLUSTER_REPS),
+    "url_depths": (q_url_depths, _SQL_URL_DEPTHS),
+    "extract_headings": (q_extract_headings, _SQL_EXTRACT_HEADINGS),
+    "html_tables": (q_html_tables, _SQL_HTML_TABLES),
+    "link_relations": (q_link_relations, _SQL_LINK_RELATIONS),
+    "event_funnel": (q_event_funnel, _SQL_EVENT_FUNNEL),
+    "shipping_priority": (q_shipping_priority, _SQL_SHIPPING_PRIORITY),
+    "small_qty_revenue": (q_small_qty_revenue, _SQL_SMALL_QTY_REVENUE),
+    "order_distribution": (q_order_distribution, _SQL_ORDER_DISTRIBUTION),
+    "top_supplier": (q_top_supplier, _SQL_TOP_SUPPLIER),
+    "regional_revenue": (q_regional_revenue, _SQL_REGIONAL_REVENUE),
+    "brand_suppliers": (q_brand_suppliers, _SQL_BRAND_SUPPLIERS),
+    "late_priority": (q_late_priority, _SQL_LATE_PRIORITY),
+    "large_orders": (q_large_orders, _SQL_LARGE_ORDERS),
+    "meta_robots": (q_meta_robots, _SQL_META_ROBOTS),
+    "line_dedup": (q_line_dedup, _SQL_LINE_DEDUP),
+    "incremental_dedup": (q_incremental_dedup, _SQL_INCREMENTAL_DEDUP),
+    "chunk_documents": (q_chunk_documents, _SQL_CHUNK_DOCS),
+    "pack_sequences": (q_pack_sequences, _SQL_PACK_SEQUENCES),
+    "pack_sequence_rows": (q_pack_sequence_rows, _SQL_PACK_SEQUENCE_ROWS),
+    "image_decode": (q_image_decode, _SQL_IMAGE_DECODE),
+    "jpeg_decode": (q_jpeg_decode, _SQL_JPEG_DECODE),
+    "gif_decode": (q_gif_decode, _SQL_GIF_DECODE),
+    "image_resize": (q_image_resize, _SQL_IMAGE_RESIZE),
+    "audio_decode": (q_audio_decode, _SQL_AUDIO_DECODE),
+    "tiff_decode": (q_tiff_decode, _SQL_TIFF_DECODE),
+    "webp_decode": (q_webp_decode, _SQL_WEBP_DECODE),
+    "webp_lossy_decode": (q_webp_lossy_decode, _SQL_WEBP_LOSSY_DECODE),
+    "audio_features": (q_audio_features, _SQL_AUDIO_FEATURES),
+    "jpeg_progressive": (q_jpeg_progressive, _SQL_JPEG_PROGRESSIVE),
+    "audio_segments": (q_audio_segments, _SQL_AUDIO_SEGMENTS),
+    "video_frames": (q_video_frames, _SQL_VIDEO_FRAMES),
+    "revenue_forecast": (q_revenue_forecast, _SQL_REVENUE_FORECAST),
+    "volume_shipping": (q_volume_shipping, _SQL_VOLUME_SHIPPING),
+    "market_share": (q_market_share, _SQL_MARKET_SHARE),
+    "returned_items": (q_returned_items, _SQL_RETURNED_ITEMS),
+    "promo_revenue": (q_promo_revenue, _SQL_PROMO_REVENUE),
+    "waiting_suppliers": (q_waiting_suppliers, _SQL_WAITING_SUPPLIERS),
+    "product_profit": (q_product_profit, _SQL_PRODUCT_PROFIT),
+    "important_stock": (q_important_stock, _SQL_IMPORTANT_STOCK),
+    "promotion_suppliers": (q_promotion_suppliers, _SQL_PROMOTION_SUPPLIERS),
+    "min_cost_supplier": (q_min_cost_supplier, _SQL_MIN_COST_SUPPLIER),
+    "shipmode_priority": (q_shipmode_priority, _SQL_SHIPMODE_PRIORITY),
+    "bracket_revenue": (q_bracket_revenue, _SQL_BRACKET_REVENUE),
+    "idle_customers": (q_idle_customers, _SQL_IDLE_CUSTOMERS),
+    "copurchase_pairs": (q_copurchase_pairs, _SQL_COPURCHASE_PAIRS),
+    "tiff_lzw_decode": (q_tiff_lzw_decode, _SQL_TIFF_LZW_DECODE),
+    "phash_groups": (q_phash_groups, _SQL_PHASH_GROUPS),
+    "png_variants_decode": (q_png_variants_decode, _SQL_PNG_VARIANTS_DECODE),
+    "ico_decode": (q_ico_decode, _SQL_ICO_DECODE),
+    "image_colors": (q_image_colors, _SQL_IMAGE_COLORS),
+    "g711_decode": (q_g711_decode, _SQL_G711_DECODE),
+    "media_pipeline": (q_media_pipeline, _SQL_MEDIA_PIPELINE),
+    "image_histogram": (q_image_histogram, _SQL_IMAGE_HISTOGRAM),
+}

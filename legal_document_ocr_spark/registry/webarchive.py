@@ -459,3 +459,18 @@ SELECT
     (doc_id % 5 + 1)::int))))) AS payload_md5
 FROM documents
 """
+
+
+# name -> (Spark callable, DuckDB oracle SQL or None); the driver order
+# lives in registry/order.py.
+QUERIES = {
+    "warc_gz_members": (q_warc_gz_members, _sql_warc_gz_members()),
+    "http_dechunk": (q_http_dechunk, _sql_http_dechunk()),
+    "http_gunzip": (q_http_gunzip, _sql_http_gunzip()),
+    "data_uri_images": (q_data_uri_images, _sql_data_uri_images()),
+    "meta_refresh_redirects": (q_meta_refresh_redirects, _sql_meta_refresh_redirects()),
+    "optout_resolution": (q_optout_resolution, _sql_optout_resolution()),
+    "multipart_parse": (q_multipart_parse, _sql_multipart_parse()),
+    "zip_members": (q_zip_members, _SQL_ZIP_MEMBERS),
+    "tar_members": (q_tar_members, _SQL_TAR_MEMBERS),
+}

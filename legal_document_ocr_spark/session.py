@@ -38,7 +38,7 @@ def build_session(
 ) -> SparkSession:
     validate_config()  # P2: fail a broken config before any executor work
     _export_package_to_workers()
-    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]"
+    master = master or f"local[{os.environ.get('SPARK_GRAFT_CPUS', os.cpu_count())}]"
     if shuffle_partitions is None:
         n = master[master.index("[") + 1 : -1] if "[" in master else "8"
         shuffle_partitions = 32 if n == "*" else max(8, int(n))

@@ -993,6 +993,8 @@ def decode_vp8_frame(data: bytes) -> dict:
     # so a payload under n_mbs/2 bits cannot be a legal keyframe
     if len(data) * 16 < n_mbs:
         raise ValueError("VP8 payload too short for declared dimensions")
+    if 10 + part1_size > len(data):
+        raise ValueError("truncated VP8 first partition")
     bd = BoolDecoder(data[10 : 10 + part1_size])
     bd.get_bit()  # color space
     bd.get_bit()  # clamping
@@ -1069,6 +1071,8 @@ def decode_vp8_frame(data: bytes) -> dict:
         pos = (n_parts - 1) * 3
         tds = []
         for s in sizes:
+            if pos + s > len(tok):
+                raise ValueError("truncated VP8 token partition")
             tds.append(BoolDecoder(tok[pos : pos + s]))
             pos += s
         tds.append(BoolDecoder(tok[pos:]))

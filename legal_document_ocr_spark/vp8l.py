@@ -637,8 +637,11 @@ def decode_vp8l_stream(data: bytes) -> dict:
 
 def decode_webp(payload: bytes) -> dict:
     """RIFF/WEBP container walk -> VP8L (lossless) or VP8 (lossy intra,
-    vp8.py — round 5, incl. B_PRED + the normal loop filter) decode.
-    Animations stay declared NotImplementedError, never silent."""
+    vp8.py, incl. B_PRED + the normal loop filter) decode. The lossy path
+    uses repo-pinned token-probability and quantizer tables: it decodes
+    this repo's own encoder output, and externally encoded lossy WebP is
+    not interoperable. Animations stay declared NotImplementedError,
+    never silent."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WEBP":
         raise ValueError("not a WebP file")
     pos = 12

@@ -46,7 +46,7 @@ sys.path.insert(0, ".")
 from legal_document_ocr_spark.session import build_session  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count()))
 TABLES = (
     "region nation customer supplier part orders lineitem events "
     "embeddings"

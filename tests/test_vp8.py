@@ -346,3 +346,26 @@ def test_declared_boundaries_raise_not_silently():
         decode_vp8_frame(frame[:3] + b"\x00\x00\x00" + frame[6:])
     with pytest.raises(ValueError, match="truncated"):
         decode_vp8_frame(frame[:5])
+
+
+def test_truncated_partitions_raise():
+    """A keyframe cut short inside the first partition, or inside a token
+    partition whose size is declared, raises instead of decoding the
+    short read as zero bits into wrong pixels."""
+    rng = random.Random(5)
+    w, h = 40, 68
+    y = bytes(rng.randrange(256) for _ in range(w * h))
+    u = bytes(rng.randrange(256) for _ in range(20 * 34))
+    v = bytes(rng.randrange(256) for _ in range(20 * 34))
+
+    def part1_end(frame):
+        return 10 + ((frame[0] | frame[1] << 8 | frame[2] << 16) >> 5)
+
+    frame, _ = encode_vp8_frame(w, h, y, u, v, qindex=25)
+    with pytest.raises(ValueError, match="truncated VP8 first partition"):
+        decode_vp8_frame(frame[: part1_end(frame) - 4])
+    frame, _ = encode_vp8_frame(w, h, y, u, v, qindex=25, token_partitions=4)
+    tok = part1_end(frame)
+    size0 = frame[tok] | frame[tok + 1] << 8 | frame[tok + 2] << 16
+    with pytest.raises(ValueError, match="truncated VP8 token partition$"):
+        decode_vp8_frame(frame[: tok + 9 + size0 // 2])
