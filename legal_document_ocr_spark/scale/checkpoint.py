@@ -15,10 +15,14 @@ app/services/document_service.py:48-50,79):
   job never yields partial reads (single-writer rename-commit, the same
   atomicity contract an Iceberg snapshot commit gives on a real catalog);
 - the manifest carries per-partition lineage + counters (partition_id, rows,
-  url min/max, bytes) gathered in the same action that writes the data —
-  via ``groupBy(spark_partition_id())`` on the result, not a second scan;
+  url min/max). The write stamps each row with its ``spark_partition_id()``;
+  ``commit()`` then reads the just-written files back (one column-pruned
+  scan of partition_id and url, not a second run of the pipeline) and
+  aggregates them, so the counters describe exactly what was committed;
 - resume = ``pages.join(done_urls, 'url', 'left_anti')`` — only urls never
-  committed are recomputed; re-running a finished job is a no-op.
+  committed are recomputed; re-running a finished job is a no-op. The url
+  column is read with its known type, so building the resume plan runs no
+  schema-inference job.
 """
 
 from __future__ import annotations
@@ -135,6 +139,10 @@ class CheckpointStore:
         run_id or a snapshot_seq — only runs committed up to and including
         that snapshot are read.
         """
+        paths = self._committed_paths(as_of)
+        return spark.read.parquet(*paths) if paths else None
+
+    def _committed_paths(self, as_of: str | int | None = None) -> list[str]:
         ms = self.manifests()
         if as_of is not None:
             cut = [
@@ -147,16 +155,15 @@ class CheckpointStore:
             if ms[cut[0]].get("expired"):
                 raise ValueError(f"snapshot {as_of!r} has been expired")
             ms = ms[: cut[0] + 1]
-        if not ms:
-            return None
-        paths = [
-            os.path.join(self.runs_dir, f"run_id={m['run_id']}") for m in ms
-        ]
-        return spark.read.parquet(*paths)
+        return [os.path.join(self.runs_dir, f"run_id={m['run_id']}") for m in ms]
 
     def done_urls(self, spark: SparkSession) -> DataFrame | None:
-        results = self.read_results(spark)
-        return None if results is None else results.select("url").distinct()
+        # the url column's type is known: an explicit schema spares the
+        # parquet footer-inference job, so building a resume plan runs none
+        paths = self._committed_paths()
+        if not paths:
+            return None
+        return spark.read.schema("url string").parquet(*paths).distinct()
 
     def filter_pending(self, pages: DataFrame) -> DataFrame:
         """Resume anti-join: keep only urls not yet committed."""

@@ -2,19 +2,29 @@
 
 The Spark-native rewrite of the reference's content-addressed pickle cache
 (app/utils/cache_manager.py:24-37 keyed on sha256, probed per region at
-app/services/ocr_process_service.py:72-79). At web scale this is the single
-most important plan rewrite (SURVEY.md §2.4 J2): Common-Crawl corpora are
-heavily duplicated, so the expensive UDF stages must run once per DISTINCT
-html payload and the results joined back to every carrying row.
+app/services/ocr_process_service.py:72-79): at web scale the corpora are
+heavily duplicated, so an expensive compute should run once per DISTINCT
+payload and its results be joined back to every carrying row (SURVEY.md
+§2.4 J2).
 
-Plan shape (and why it scales):
+This is no longer the flagship path. ``stages.run_extraction`` dedups by
+co-location instead: one exchange on the content key, a sort on it, and
+UDFs that reuse their previous result while the input repeats — no
+aggregate, no join-back, no second scan. That only works when the compute
+is a per-row UDF that can see its neighbours. ``dedup_compute`` stays as
+the generic combinator for computes that are arbitrary DataFrame
+transformations of the distinct rows (joins, aggregates, several
+columns), where no such memo exists.
+
+Plan shape:
 - the dedup key is ``sha2(payload, 256)`` — computed JVM-side, no Python;
-- ``dropDuplicates`` on the 64-char hash is a partial-aggregated shuffle on a
-  short fixed-width key (map-side combine collapses duplicates before the
-  exchange — the multi-MB payload crosses the wire once per distinct value,
-  carried by the first() aggregate);
-- the join-back is a plain equi-join on the same short key; with AQE enabled
-  Spark picks broadcast when the distinct side is small, sort-merge otherwise.
+- a ``first(payload)`` aggregate on the 64-char key is a partial-aggregated
+  shuffle (map-side combine collapses duplicates before the exchange, so a
+  multi-MB payload crosses the wire once per distinct value per map task);
+  binary ``first()`` forces a SortAggregate, and ``keyed`` feeds both the
+  aggregate and the carrier, so the input is scanned twice;
+- the join-back is an equi-join on the same short key, hinted shuffle-hash
+  (see the comment at the join).
 """
 
 from __future__ import annotations

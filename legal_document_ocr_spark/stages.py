@@ -3,15 +3,21 @@
 The rebuild of the reference's per-page pipeline (app/services/ocr_service.py:
 107-148) as Spark stages (SURVEY.md §3.1 "Spark trace"):
 
-    scan -> native filters (P1) -> salted repartition -> dedup-by-hash ->
-    [UDF stage: decode/normalize K1 + layout-detect K2/K5-K7 + text-extract
-    K4/A2] -> [UDF stage: field battery K9-K13] -> lineage -> sink
+    scan -> native filters (P1) -> [resume anti-join] -> content-key
+    exchange + sort -> [UDF: decode/normalize K1 + layout-detect K2/K5-K7 +
+    text-extract K4/A2] -> [UDF: field battery K9-K13] -> lineage -> sink
 
 Design decisions:
 - both heavy stages are scalar ITERATOR pandas UDFs (Iterator[Series] ->
   Iterator[DataFrame]): Arrow-batched transfer, per-worker init amortized
   across batches — the analogue of the reference's process-pool init
   amortization (ocr_process_service.py:13-29), without the pool;
+- dedup is co-location, not aggregation: one hash exchange on
+  ``sha2(html, 256)`` plus a sort on the same key puts every copy of a
+  payload next to the others in one task, and each UDF reuses its previous
+  result while its input repeats. The kernels run once per distinct payload
+  with no aggregate, no join-back and no second scan, and both UDFs run
+  pipelined in the task that follows the exchange;
 - the field battery is pinned to Python ``re`` inside the UDF rather than
   Catalyst ``regexp_extract`` because byte-identical parity with the
   reference requires Python-regex semantics for Vietnamese case folding
@@ -26,7 +32,8 @@ Design decisions:
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -43,7 +50,6 @@ from pyspark.sql.types import (
 
 from .config import ALLOWED_SCHEMES, FIELD_NAMES, MAX_HTML_BYTES
 from .kernels import extract_fields, extract_page
-from .scale.dedup_compute import dedup_compute
 from .scale.salt import ensure_parallelism, salted_repartition
 
 SPAN_TYPE = StructType(
@@ -76,25 +82,36 @@ PAGE_RESULT_TYPE = StructType(
 )
 FIELDS_TYPE = StructType([StructField(f, StringType()) for f in FIELD_NAMES])
 
+_UNSET = object()  # "no previous input": None is a real input value
+_KEY = "__content_key"
+
+
+def _adjacent_memo(
+    kernel: Callable[[Any], dict], batches: Iterator[pd.Series], columns: list[str]
+) -> Iterator[pd.DataFrame]:
+    """``kernel`` per value, reusing the previous result while the value
+    repeats (also across batches of one task). The full value is compared,
+    never a hash of it, so a reused result is always the kernel's own."""
+    last, result = _UNSET, None
+    for series in batches:
+        rows = []
+        for value in series:
+            if last is _UNSET or value != last:
+                last, result = value, kernel(value)
+            rows.append(result)
+        yield pd.DataFrame(rows, columns=columns)
+
 
 @pandas_udf(PAGE_RESULT_TYPE)
 def extract_page_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     """Stage 1+2+3: decode -> segment -> density filter -> reading-order join."""
-    for series in batches:
-        yield pd.DataFrame(
-            [extract_page(raw) for raw in series],
-            columns=list(PAGE_RESULT_TYPE.fieldNames()),
-        )
+    yield from _adjacent_memo(extract_page, batches, PAGE_RESULT_TYPE.fieldNames())
 
 
 @pandas_udf(FIELDS_TYPE)
 def extract_fields_udf(batches: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
     """Stage 4: field post-processing battery (K9-K13), Python-re pinned."""
-    for series in batches:
-        yield pd.DataFrame(
-            [extract_fields(t) for t in series],
-            columns=list(FIELD_NAMES),
-        )
+    yield from _adjacent_memo(extract_fields, batches, list(FIELD_NAMES))
 
 
 def valid_pages(pages: DataFrame) -> DataFrame:
@@ -151,30 +168,44 @@ def run_extraction(
     the dedup payload shuffle when the corpus is (nearly) duplicate-free —
     on a dup-free corpus dedup shuffles every payload and collapses nothing,
     pure cost; on a Common-Crawl-like corpus it halves the UDF work or more.
+
+    Dedup hash-repartitions on ``sha2(html, 256)`` and sorts each partition
+    on that key, so the UDFs' adjacent-duplicate memo runs each kernel once
+    per distinct payload. That exchange is the pipeline's only one: ``salt``
+    is not applied (the content hash already spreads hot domains) and
+    ``salt_partitions``, when given, sets its partition count; otherwise AQE
+    coalesces it. Without dedup, ``salt`` selects a salted repartition and
+    narrow inputs are spread to the default parallelism.
     """
     # the input `text` column is not part of the output contract and would
-    # otherwise ride through every exchange (dedup join, merge shuffle)
+    # otherwise ride through every exchange (dedup, merge shuffle)
     df = valid_pages(pages).drop("text")
     if checkpoint is not None:
         df = checkpoint.filter_pending(df)
-    if salt:
+    if dedup == "auto":
+        dedup = estimate_distinct_ratio(df) <= DEDUP_AUTO_THRESHOLD
+    if dedup:
+        keyed = df.withColumn(_KEY, F.sha2(F.col("html"), 256))
+        spread = (
+            keyed.repartition(salt_partitions, _KEY)
+            if salt_partitions
+            else keyed.repartition(_KEY)
+        )
+        df = spread.sortWithinPartitions(_KEY).drop(_KEY)
+    elif salt:
         df = salted_repartition(df, salt_partitions)
     else:
         # narrow inputs (single-file local scans) would serialize the UDF
         # stages on one core; no-op when the scan is already parallel
         df = ensure_parallelism(df)
 
-    def compute(distinct: DataFrame) -> DataFrame:
-        return distinct.withColumn("_page", extract_page_udf(F.col("html")))
-
-    if dedup == "auto":
-        dedup = estimate_distinct_ratio(df) <= DEDUP_AUTO_THRESHOLD
-    if dedup:
-        extracted = dedup_compute(df, "html", compute)
-    else:
-        extracted = compute(df)
     # drop the byte-dominant binary column as early as possible
-    extracted = extracted.drop("html").select("*", "_page.*").drop("_page")
+    extracted = (
+        df.withColumn("_page", extract_page_udf(F.col("html")))
+        .drop("html")
+        .select("*", "_page.*")
+        .drop("_page")
+    )
     if with_fields:
         extracted = extracted.withColumn(
             "fields", extract_fields_udf(F.col("extracted_text"))

@@ -5,12 +5,17 @@ The oracle is the SAME kernel code run as plain pandas over the fixture rows
 bytes exactly; spans/tables/fields must match structurally.
 """
 
+import re
+
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
+from legal_document_ocr_spark import stages
 from legal_document_ocr_spark.config import MAX_HTML_BYTES
 from legal_document_ocr_spark.kernels import extract_fields, extract_page
 from legal_document_ocr_spark.merge import merge_documents
+from legal_document_ocr_spark.plans.inspect import executed_plan
 from legal_document_ocr_spark.sources import fixture_pages_df, fixture_rows
 from legal_document_ocr_spark.stages import run_extraction, valid_pages
 
@@ -145,6 +150,67 @@ class TestDedupEquivalence:
             by_payload.setdefault(url.rsplit("/", 1)[-1], set()).add(text)
         for key, texts in by_payload.items():
             assert len(texts) == 1, key
+
+
+class TestAdjacentMemo:
+    """The UDFs reuse their previous result while the input repeats, so
+    with copies of a payload sorted together each kernel runs once per
+    distinct payload. No Spark session: the UDF bodies are driven directly."""
+
+    PAGE_A = "<html><body><p>" + "Điều 1. Phạm vi điều chỉnh. " * 4 + "</p></body></html>"
+    PAGE_B = "<html><body><main><p>" + "Second page text. " * 4 + "</p></main></body></html>"
+
+    @pytest.mark.parametrize(
+        "name, udf, a, b",
+        [
+            ("extract_page", stages.extract_page_udf, PAGE_A.encode(), PAGE_B.encode()),
+            (
+                "extract_fields",
+                stages.extract_fields_udf,
+                "Số: 12/2020/NĐ-CP ngày 01 tháng 02 năm 2020",
+                "QUYẾT ĐỊNH về việc ban hành quy chế",
+            ),
+        ],
+    )
+    def test_kernel_runs_once_per_adjacent_run(self, monkeypatch, name, udf, a, b):
+        # adjacent copies, a run split across the batch boundary, None twice
+        # and a repeat of ``a`` that is not adjacent to it: four runs. Every
+        # copy is a new object, as Arrow hands them over: equal, not identical
+        def c(v):
+            return v[:1] + v[1:]
+
+        batches = [[a, c(a), b], [c(b), None, None, c(a)]]
+        real, calls = getattr(stages, name), []
+
+        def counted(value):
+            calls.append(value)
+            return real(value)
+
+        monkeypatch.setattr(stages, name, counted)
+        frames = list(udf.func(pd.Series(batch, dtype=object) for batch in batches))
+        assert [len(f) for f in frames] == [len(batch) for batch in batches]
+        got = pd.concat(frames, ignore_index=True).to_dict("records")
+        assert got == [real(v) for batch in batches for v in batch]
+        assert calls == [a, b, None, a]
+
+
+class TestFlagshipPlan:
+    def test_one_content_key_exchange_no_join_no_aggregate(self, spark):
+        """Dedup is one hash exchange on the sha2 content key; both UDFs run
+        in the task after it, with no aggregate and no join-back."""
+        plan = executed_plan(
+            run_extraction(fixture_pages_df(spark), dedup=True, with_fields=True)
+        )
+        lines = plan.splitlines()
+        exchanges = [ln for ln in lines if "Exchange " in ln]
+        assert len(exchanges) == 1, plan
+        key = re.search(r"Exchange hashpartitioning\((__content_key#\d+),", exchanges[0])
+        assert key, plan
+        assert re.search(rf"sha2\(html#\d+, 256\) AS {key.group(1)}\b", plan), plan
+        assert "Join" not in plan and "Aggregate" not in plan, plan
+        udfs = [i for i, ln in enumerate(lines) if "ArrowEvalPython" in ln]
+        assert len(udfs) == 2, plan
+        assert not any("Exchange" in ln for ln in lines[udfs[0] : udfs[1]]), plan
 
 
 class TestSaltInvariance:

@@ -1,5 +1,7 @@
 """Scale combinator tests: dedup_compute, checkpoint/resume, skew keys."""
 
+import re
+
 import pyspark.sql.functions as F
 import pytest
 
@@ -120,6 +122,30 @@ class TestCheckpointResume:
         for p in manifest["partitions"]:
             assert p["url_min"] <= p["url_max"]
 
+    def test_building_resume_pipeline_runs_no_job(self, spark, tmp_path):
+        """Building the dedup pipeline over the resume anti-join starts no
+        Spark job before the action (no partition-count probe)."""
+        store = CheckpointStore(str(tmp_path / "ckpt5"))
+        pages = fixture_pages_df(spark)
+        store.commit(
+            run_extraction(pages.limit(5), with_fields=False).select(
+                "url", "extracted_text"
+            )
+        )
+        sc, group = spark.sparkContext, f"build-{tmp_path.name}"
+        tracker = sc.statusTracker()
+        sc.setJobGroup(group, "build the resume pipeline")
+        try:
+            out = run_extraction(pages, dedup=True, checkpoint=store)
+            built = list(tracker.getJobIdsForGroup(group))
+            out.count()
+            ran = list(tracker.getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        assert built == []
+        assert ran  # the group does see the action's jobs
+
 
 class TestTimeTravel:
     def test_as_of_snapshot(self, spark, tmp_path):
@@ -188,6 +214,14 @@ class TestTimeTravel:
         assert store.remove_orphan_files() == []
 
 
+def _content_key_repartition(plan: str) -> bool:
+    """Dedup engaged: a RepartitionByExpression on the sha2(html) key."""
+    m = re.search(r"RepartitionByExpression \[(__content_key#\d+)\]", plan)
+    return bool(m) and bool(
+        re.search(rf"sha2\(html#\d+, 256\) AS {m.group(1)}\b", plan)
+    )
+
+
 class TestDedupAuto:
     def test_auto_skips_dedup_on_distinct_corpus(self, spark):
         from legal_document_ocr_spark.sources.pages import synthesize_scaled_pages_df
@@ -200,7 +234,7 @@ class TestDedupAuto:
             .optimizedPlan()
             .toString()
         )
-        assert "Join" not in plan  # payload shuffle skipped
+        assert not _content_key_repartition(plan)  # payload shuffle skipped
 
         dup = synthesize_scaled_pages_df(
             spark, "/root/testdata/sf0.001", 4, dup_rate=0.5
@@ -211,7 +245,7 @@ class TestDedupAuto:
             .optimizedPlan()
             .toString()
         )
-        assert "Join" in plan2  # dedup engaged
+        assert _content_key_repartition(plan2)  # dedup engaged
 
     def test_estimate_distinct_ratio(self, spark):
         from legal_document_ocr_spark.sources.pages import synthesize_scaled_pages_df
