@@ -360,11 +360,6 @@ _SUBJECT_RE = re.compile(
     r"(?i)(?:v/v|về việc)\s+(.*?)(?=\r\n\r\n|\Z)",
     re.DOTALL,
 )
-_AGENCY_HEAD_RE = re.compile(
-    # information_extraction_service.py:51
-    r"^(.*?)(?=\r\n.*?ngày|\Z)",
-    re.DOTALL,
-)
 _AGENCY_LINE_DROP_RE = re.compile(r"(?i)(số|ngày)")  # :57 (P10)
 
 _COMPILED_PATTERNS: dict[str, list[tuple[re.Pattern[str], list[str]]]] = {
@@ -384,6 +379,15 @@ def _gate_open(lower_text: str, gate: list[str]) -> bool:
     (any-of, lowercase) is present. Skipping a gated-out pattern never
     changes the result — see config.PATTERN_GATES."""
     return not gate or any(lit in lower_text for lit in gate)
+
+
+def agency_head(text: str) -> str:
+    r"""The text before the first CRLF when a "ngày" follows that CRLF, else
+    the whole text: the match of information_extraction_service.py:51's
+    ``^(.*?)(?=\r\n.*?ngày|\Z)`` (DOTALL) in linear time. The regex
+    rescans the tail from every CRLF when no "ngày" follows."""
+    p = text.find("\r\n")
+    return text[:p] if p >= 0 and text.find("ngày", p + 2) >= 0 else text
 
 
 def extract_fields(text: str | None) -> dict[str, str | None]:
@@ -410,15 +414,13 @@ def extract_fields(text: str | None) -> dict[str, str | None]:
         if m:
             info["subject"] = m.group(1).strip()
     if not info["issuing_agency"]:
-        m = _AGENCY_HEAD_RE.search(text)
-        if m:
-            agency_lines = [
-                line.strip()
-                for line in m.group(1).strip().split("\r\n")
-                if line.strip() and not _AGENCY_LINE_DROP_RE.match(line)
-            ]
-            if agency_lines:
-                info["issuing_agency"] = "\r\n".join(agency_lines)
+        agency_lines = [
+            line.strip()
+            for line in agency_head(text).strip().split("\r\n")
+            if line.strip() and not _AGENCY_LINE_DROP_RE.match(line)
+        ]
+        if agency_lines:
+            info["issuing_agency"] = "\r\n".join(agency_lines)
     return info
 
 

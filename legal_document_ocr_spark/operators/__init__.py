@@ -1,8 +1,8 @@
 """Operator library — Catalyst-first implementations of the engine surface.
 
 - ``textops``    — language-ID, quality scoring, token counting, document
-  fingerprinting, SQL-safe field-extraction battery (SURVEY.md §2.3 K8-K14
-  re-expressed as native expressions).
+  fingerprinting (SURVEY.md §2.3 K8-K14 re-expressed as native
+  expressions).
 - ``dedup``      — exact (sha2 group), MinHash+LSH, SimHash, n-gram Jaccard,
   embedding-cosine near-dup (the web-scale rewrite of the reference's
   content-addressed cache, SURVEY.md §2.4 J2).

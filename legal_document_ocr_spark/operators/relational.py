@@ -249,7 +249,7 @@ def domain_profile(pages: DataFrame) -> DataFrame:
     """Per-domain corpus profile: page count, byte volume, distinct-payload
     count and dup ratio — the skew/duplication diagnosis pass that sizes the
     salting policy (scale/salt.py: one hot domain = one straggler) and the
-    dedup-before-compute decision (stages.run_extraction(dedup='auto')).
+    choice of stages.run_extraction's ``dedup`` flag.
 
     One map-side-combined shuffle on the domain key; payloads are reduced to
     their sha2 BEFORE the exchange (the bytes never shuffle).

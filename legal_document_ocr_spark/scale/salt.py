@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from ..config import SALT_BUCKETS, SIZE_BUCKET_EDGES
 
 _HOST_RE = r"^[a-zA-Z][a-zA-Z0-9+.-]*://([^/?#]+)"
+SKEW_KEYS = ("domain", "size_bucket", "salt")  # the columns with_skew_keys adds
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -69,10 +70,9 @@ def salted_repartition(
     from piling into one task's Arrow batches.
     """
     keyed = with_skew_keys(df, url_col, payload_col)
-    cols = [F.col("domain"), F.col("size_bucket"), F.col("salt")]
     if num_partitions:
-        return keyed.repartition(num_partitions, *cols)
-    return keyed.repartition(*cols)
+        return keyed.repartition(num_partitions, *SKEW_KEYS)
+    return keyed.repartition(*SKEW_KEYS)
 
 
 def salted_group_counts(

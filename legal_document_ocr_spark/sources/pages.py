@@ -33,6 +33,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from ..scale.salt import ensure_parallelism
+
 PAGES_SCHEMA = StructType(
     [
         StructField("url", StringType()),
@@ -63,23 +65,13 @@ _TEMPLATE_TAIL = (
 )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Round-robin a narrow scan across the default parallelism (test corpora
-    are single parquet files = single partitions; synthesis expressions run
-    below any later exchange, so the spread must happen before them)."""
-    target = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
-        return df
-    return df.repartition(target)
-
-
 def synthesize_pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Derive the pages table from documents.parquet — pure Catalyst, no UDF.
 
     url/warc_ts/html are all deterministic functions of (doc_id, source, lang,
     text); html is the fixed template around the document body, UTF-8 encoded.
     """
-    docs = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = ensure_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     return docs.select(
         F.concat(
             F.lit("https://"),
@@ -115,7 +107,7 @@ def synthesize_scaled_pages_df(
     # spread BEFORE the explode/encode: the driver parquet is one file = one
     # partition, and Catalyst evaluates the synthesis expressions below any
     # later repartition — without this the corpus is built on a single core
-    docs = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = ensure_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     n_distinct = max(1, round(replicas * (1.0 - dup_rate)))
     rep = docs.select(
         "doc_id",
@@ -160,7 +152,7 @@ def synthesize_table_pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     (SURVEY.md K5-K7) and table-shape aggregate (A6) become by-construction
     oracle-checkable: num_rows=2, num_cols=3, cells in (row, col) order.
     """
-    docs = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = ensure_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     did = F.col("doc_id").cast("string")
 
     def cell(r: int, c: int):
@@ -223,7 +215,7 @@ def synthesize_vn_pages_df(
     battery and the merge fold in closed form. Pages of one document share
     ``Số:`` so the merge fold groups them; urls sort in page order.
     """
-    docs = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = ensure_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     pages = docs.select(
         "doc_id",
         "text",
@@ -281,7 +273,7 @@ def synthesize_vn_split_pages_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     logical documents per source_doc — a closed-form oracle for the group
     BOUNDARY, complementing the all-merge corpus.
     """
-    docs = _spread(spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    docs = ensure_parallelism(spark.read.parquet(f"{sf_dir}/documents.parquet"))
     pages = docs.select(
         "doc_id",
         "text",

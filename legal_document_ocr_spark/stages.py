@@ -18,11 +18,10 @@ Design decisions:
   result while its input repeats. The kernels run once per distinct payload
   with no aggregate, no join-back and no second scan, and both UDFs run
   pipelined in the task that follows the exchange;
-- the field battery is pinned to Python ``re`` inside the UDF rather than
-  Catalyst ``regexp_extract`` because byte-identical parity with the
-  reference requires Python-regex semantics for Vietnamese case folding
-  (SURVEY.md §7 risk 1); a Catalyst-native variant of the SQL-safe subset
-  lives in operators/textops.py and is oracle-checked;
+- the field battery is ``kernels.extract_fields`` (Python ``re``) inside
+  the UDF, and it is the only one: byte-identical parity with the reference
+  requires Python-regex semantics for Vietnamese case folding (SURVEY.md §7
+  risk 1), which Catalyst ``regexp_extract`` cannot be shown to match;
 - cheap predicates stay native and BEFORE the UDF stages — Catalyst will not
   push filters through a pandas UDF (SURVEY.md §4), so plan order is the
   pushdown;
@@ -50,7 +49,7 @@ from pyspark.sql.types import (
 
 from .config import ALLOWED_SCHEMES, FIELD_NAMES, MAX_HTML_BYTES
 from .kernels import extract_fields, extract_page
-from .scale.salt import ensure_parallelism, salted_repartition
+from .scale.salt import SKEW_KEYS, ensure_parallelism, salted_repartition
 
 SPAN_TYPE = StructType(
     [
@@ -126,74 +125,40 @@ def valid_pages(pages: DataFrame) -> DataFrame:
     )
 
 
-DEDUP_AUTO_SAMPLE = 0.02       # sample fraction for the dup-ratio estimate
-DEDUP_AUTO_THRESHOLD = 0.95    # distinct_ratio above this -> skip dedup
-
-
-def estimate_distinct_ratio(
-    df: DataFrame, payload_col: str = "html", fraction: float = DEDUP_AUTO_SAMPLE
-) -> float:
-    """Cheap dup-ratio estimate: distinct/total over a payload sample.
-
-    Scans a sample of the input (hashes only, no shuffle of payloads) — the
-    cost that decides whether the dedup payload shuffle is worth paying.
-    """
-    def ratio_of(frame: DataFrame):
-        return frame.agg(
-            F.count("*").alias("n"),
-            F.approx_count_distinct(F.sha2(F.col(payload_col), 256)).alias("d"),
-        ).collect()[0]
-
-    row = ratio_of(df.select(payload_col).sample(fraction=fraction, seed=7))
-    if row["n"] < 5000:
-        # tiny sample -> estimator variance dominates; exact pass is cheap
-        row = ratio_of(df.select(payload_col))
-    return 1.0 if not row["n"] else min(1.0, row["d"] / row["n"])
-
-
 def run_extraction(
     pages: DataFrame,
     *,
-    dedup: bool | str = True,
+    dedup: bool = True,
     salt: bool = False,
-    salt_partitions: int | None = None,
     with_fields: bool = True,
     checkpoint=None,
 ) -> DataFrame:
     """The flagship pipeline: pages -> (url, warc_ts, lang, extracted_text,
-    spans, tables, fields, lineage).
+    spans, tables, n_blocks, n_kept, [fields], lineage).
 
-    ``dedup``: True = always dedup-before-compute; False = never;
-    ``"auto"`` = estimate the corpus dup ratio from a payload sample and skip
-    the dedup payload shuffle when the corpus is (nearly) duplicate-free —
-    on a dup-free corpus dedup shuffles every payload and collapses nothing,
-    pure cost; on a Common-Crawl-like corpus it halves the UDF work or more.
-
-    Dedup hash-repartitions on ``sha2(html, 256)`` and sorts each partition
-    on that key, so the UDFs' adjacent-duplicate memo runs each kernel once
-    per distinct payload. That exchange is the pipeline's only one: ``salt``
-    is not applied (the content hash already spreads hot domains) and
-    ``salt_partitions``, when given, sets its partition count; otherwise AQE
-    coalesces it. Without dedup, ``salt`` selects a salted repartition and
-    narrow inputs are spread to the default parallelism.
+    ``dedup`` hash-repartitions on ``sha2(html, 256)`` and sorts each
+    partition on that key, so the UDFs' adjacent-duplicate memo runs each
+    kernel once per distinct payload. That exchange is the pipeline's only
+    one and AQE coalesces it; ``salt`` is not applied (the content hash
+    already spreads hot domains). Without dedup, ``salt`` repartitions on
+    (domain, size_bucket, salt) and narrow unsalted inputs are spread to the
+    default parallelism. ``checkpoint`` (a CheckpointStore) skips urls it
+    has already committed; ``with_fields`` adds the field battery column.
     """
     # the input `text` column is not part of the output contract and would
     # otherwise ride through every exchange (dedup, merge shuffle)
     df = valid_pages(pages).drop("text")
     if checkpoint is not None:
         df = checkpoint.filter_pending(df)
-    if dedup == "auto":
-        dedup = estimate_distinct_ratio(df) <= DEDUP_AUTO_THRESHOLD
     if dedup:
-        keyed = df.withColumn(_KEY, F.sha2(F.col("html"), 256))
-        spread = (
-            keyed.repartition(salt_partitions, _KEY)
-            if salt_partitions
-            else keyed.repartition(_KEY)
+        df = (
+            df.withColumn(_KEY, F.sha2(F.col("html"), 256))
+            .repartition(_KEY)
+            .sortWithinPartitions(_KEY)
+            .drop(_KEY)
         )
-        df = spread.sortWithinPartitions(_KEY).drop(_KEY)
     elif salt:
-        df = salted_repartition(df, salt_partitions)
+        df = salted_repartition(df).drop(*SKEW_KEYS)
     else:
         # narrow inputs (single-file local scans) would serialize the UDF
         # stages on one core; no-op when the scan is already parallel

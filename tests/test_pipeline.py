@@ -213,22 +213,34 @@ class TestFlagshipPlan:
         assert not any("Exchange" in ln for ln in lines[udfs[0] : udfs[1]]), plan
 
 
+class TestOutputContract:
+    @pytest.mark.parametrize("with_fields", [True, False])
+    @pytest.mark.parametrize("salt", [True, False])
+    @pytest.mark.parametrize("dedup", [True, False])
+    def test_columns(self, spark, dedup, salt, with_fields):
+        """Every option combination yields the same columns, in order."""
+        out = run_extraction(
+            fixture_pages_df(spark), dedup=dedup, salt=salt, with_fields=with_fields
+        )
+        page = ["extracted_text", "spans", "tables", "n_blocks", "n_kept"]
+        fields = ["fields"] if with_fields else []
+        assert out.columns == ["url", "warc_ts", "lang", *page, *fields, "lineage"]
+
+
 class TestSaltInvariance:
     """F11 — output must not depend on partitioning (SURVEY.md §5.4)."""
 
     def test_salted_equals_unsalted(self, spark):
+        # dedup ignores ``salt``, so both sides run without it
         pages = fixture_pages_df(spark)
-        plain = (
-            run_extraction(pages, salt=False, with_fields=False)
-            .select("url", "extracted_text")
-            .collect()
-        )
-        salted = (
-            run_extraction(pages, salt=True, salt_partitions=13, with_fields=False)
-            .select("url", "extracted_text")
-            .collect()
-        )
-        assert sorted(map(tuple, plain)) == sorted(map(tuple, salted))
+        plain = run_extraction(pages, dedup=False, salt=False, with_fields=False)
+        salted = run_extraction(pages, dedup=False, salt=True, with_fields=False)
+        assert salted.columns == plain.columns
+
+        def rows(df):
+            return sorted(map(tuple, df.select("url", "extracted_text").collect()))
+
+        assert rows(plain) == rows(salted)
 
     def test_row_order_invariance(self, spark):
         pages = fixture_pages_df(spark)

@@ -7,9 +7,12 @@ hold their structural invariants on every input, not just fixtures.
 
 from __future__ import annotations
 
+import re
+
 from hypothesis import given, settings, strategies as st
 
 from legal_document_ocr_spark.kernels import (
+    agency_head,
     clean_text,
     decode_html,
     extract_fields,
@@ -61,6 +64,20 @@ def test_extract_fields_total(t):
     assert set(info) == set(FIELD_NAMES)
     for v in info.values():
         assert v is None or isinstance(v, str)
+
+
+# information_extraction_service.py:51 — the reference regex agency_head
+# replaces, kept as its oracle
+_AGENCY_HEAD_RE = re.compile(r"^(.*?)(?=\r\n.*?ngày|\Z)", re.DOTALL)
+AGENCY_TEXT = st.lists(
+    st.sampled_from(["\r\n", "\r", "\n", "ngày", "NGÀY", "x", " "]), max_size=40
+).map("".join)
+
+
+@given(AGENCY_TEXT | TEXT)
+@settings(max_examples=500, deadline=None)
+def test_agency_head_matches_reference_regex(t):
+    assert agency_head(t) == _AGENCY_HEAD_RE.search(t).group(1)
 
 
 @given(TEXT)

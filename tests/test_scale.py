@@ -1,7 +1,5 @@
 """Scale combinator tests: dedup_compute, checkpoint/resume, skew keys."""
 
-import re
-
 import pyspark.sql.functions as F
 import pytest
 
@@ -212,50 +210,6 @@ class TestTimeTravel:
         assert not os.path.exists(os.path.join(store.runs_dir, "run_id=crashed"))
         assert store.read_results(spark).count() == 1
         assert store.remove_orphan_files() == []
-
-
-def _content_key_repartition(plan: str) -> bool:
-    """Dedup engaged: a RepartitionByExpression on the sha2(html) key."""
-    m = re.search(r"RepartitionByExpression \[(__content_key#\d+)\]", plan)
-    return bool(m) and bool(
-        re.search(rf"sha2\(html#\d+, 256\) AS {m.group(1)}\b", plan)
-    )
-
-
-class TestDedupAuto:
-    def test_auto_skips_dedup_on_distinct_corpus(self, spark):
-        from legal_document_ocr_spark.sources.pages import synthesize_scaled_pages_df
-        from legal_document_ocr_spark.stages import run_extraction
-
-        distinct = synthesize_scaled_pages_df(spark, "/root/testdata/sf0.001", 4)
-        plan = (
-            run_extraction(distinct, dedup="auto")
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-        )
-        assert not _content_key_repartition(plan)  # payload shuffle skipped
-
-        dup = synthesize_scaled_pages_df(
-            spark, "/root/testdata/sf0.001", 4, dup_rate=0.5
-        )
-        plan2 = (
-            run_extraction(dup, dedup="auto")
-            ._jdf.queryExecution()
-            .optimizedPlan()
-            .toString()
-        )
-        assert _content_key_repartition(plan2)  # dedup engaged
-
-    def test_estimate_distinct_ratio(self, spark):
-        from legal_document_ocr_spark.sources.pages import synthesize_scaled_pages_df
-        from legal_document_ocr_spark.stages import estimate_distinct_ratio
-
-        dup = synthesize_scaled_pages_df(
-            spark, "/root/testdata/sf0.001", 8, dup_rate=0.5
-        )
-        r = estimate_distinct_ratio(dup, fraction=1.0)
-        assert 0.4 < r < 0.6
 
 
 def test_iceberg_real_catalog_roundtrip(tmp_path):
